@@ -167,9 +167,10 @@ def assign_components(
 
     assume_unique_ids=True skips the defensive distinct() over the id
     universe — a full exchange of the largest table in the job. The
-    pipeline passes True: its id column is the page url, a primary key by
-    the input contract (validate_pages_schema), so the distinct
-    deduplicated nothing."""
+    pipeline passes True: its id column is the page url, and unique urls
+    are an input contract that nothing checks (validate_pages_schema only
+    checks that the columns exist). A duplicate id then yields one
+    (id, component) row per copy."""
     comp = connected_components(
         edges, assume_distinct=assume_distinct, input_cached=input_cached
     )

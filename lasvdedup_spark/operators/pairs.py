@@ -1,10 +1,25 @@
-"""Generic skew-proof unordered-pair generation from a keyed table.
+"""Generic skew-proof key joins, written once.
 
-One routine serves every tier that turns key collisions into candidate
-pairs — LSH band buckets (minhash), token L-grams (substring), hyperplane
-buckets (ann). All three share the same scale hazard: a boilerplate key
-with m members puts m^2/2 pair enumerations in one task. The fix is the
-north rule's salted join, written once.
+Every tier that turns key collisions into candidate pairs — LSH band
+buckets (minhash), token L-grams (substring), simhash bands, hyperplane
+buckets (ann), IVF inverted lists, the streaming band index — shares the
+same scale hazard: a boilerplate key with m members puts m^2/2 pair
+enumerations in one task. The fix is the north rule's salted join, and it
+lives in one kernel, ``_salted_join(hot, other, ...)``:
+
+  1. census (``_census``) on the HOT side — the side whose key groups can
+     grow without bound — yields ``big``, the over-cutoff key list;
+  2. split: broadcast left_anti / left_semi probes against ``big`` route
+     small keys to a plain equi-join and hot keys to the salted one;
+  3. salt: hot-side rows keep ONE salt pmod(xxhash64(id), S), other-side
+     rows replicate to every salt, so joining on (key, salt) produces each
+     pair exactly once while spreading a hot key's pair space over S tasks;
+  4. result: plain UNION salted, with an optional row predicate.
+
+The self join (``salted_pair_join``) is the case ``hot is other`` with the
+predicate a.id < b.id; ``salted_cross_join`` passes its unbounded ``right``
+side as hot; ``capped_by_key`` reuses the census and split alone. The
+``salt_buckets <= 1`` plain join is also written once, in the kernel.
 
 Lazy by construction: no action runs at plan-composition time (the round-1
 version ran an isEmpty() census to route around the salt machinery; that
@@ -12,14 +27,80 @@ executed the whole upstream subtree just to build a plan and made the
 operator illegal on streaming DataFrames). Instead the plan is always
   plain(small keys, via left_anti)  UNION  salted(big keys, via left_semi)
 and when no key exceeds the cutoff the salted side is simply empty at
-runtime — the empty case costs one map-side-combinable size census and two
+runtime — the empty case costs one map-side-combinable size census and
 broadcast probes, not a driver-side branch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _census(df: DataFrame, key_col: str, cutoff: int) -> tuple[DataFrame, DataFrame]:
+    """-> (df behind a lazy localCheckpoint, ``big`` = keys with more than
+    ``cutoff`` rows, checkpointed on its own).
+
+    Both are referenced by several subtrees (census, anti probe, semi
+    probe, both join ends) and Spark has no cross-subtree CSE: without the
+    checkpoints the upstream pipeline would run once per reference, and the
+    full census aggregation — a pass over ``df`` plus an exchange — once
+    per broadcast probe (4 Exchange census subtrees in the r06
+    before-plans). Lazy = still no job at composition time."""
+    df = df.localCheckpoint(eager=False)
+    sizes = df.groupBy(key_col).agg(F.count("*").alias("_ksz"))
+    big = sizes.where(F.col("_ksz") > cutoff).select(key_col).localCheckpoint(eager=False)
+    return df, big
+
+
+def _split(df: DataFrame, key_col: str, big: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """-> (rows of small keys, rows of ``big`` keys), by broadcast probes."""
+    return (
+        df.join(F.broadcast(big), key_col, "left_anti"),
+        df.join(F.broadcast(big), key_col, "left_semi"),
+    )
+
+
+def _salted_join(
+    hot: DataFrame,
+    other: DataFrame,
+    key_col: str,
+    salt_buckets: int,
+    cutoff: int,
+    cols: list[Column],
+    where: Column | None = None,
+) -> DataFrame:
+    """Equi-join of ``hot`` and ``other`` on ``key_col`` with the hot
+    side's over-``cutoff`` keys salted over ``salt_buckets`` tasks (module
+    docstring), projected to ``cols`` over the aliases a / b.
+
+    Alias and join orientation: a self join (``hot is other``) puts the
+    hot, single-salt side on the left as ``a``; a cross join puts ``other``
+    on the left as ``a``. Flipping the self case's salt orientation keeps
+    the rows but measurably grows the downstream pair-dedup exchange."""
+    self_join = hot is other
+
+    def join(h: DataFrame, o: DataFrame, keys) -> DataFrame:
+        a, b = (h, o) if self_join else (o, h)
+        j = a.alias("a").join(b.alias("b"), keys)
+        return (j if where is None else j.where(where)).select(*cols)
+
+    if salt_buckets <= 1:
+        return join(hot, other, key_col)
+    hot, big = _census(hot, key_col, cutoff)
+    other = hot if self_join else other.localCheckpoint(eager=False)
+    hot_small, hot_big = _split(hot, key_col, big)
+    # a cross join's plain path keeps ALL other-side rows: a big-key row
+    # there finds no partner in hot_small, so no anti probe is needed
+    plain = join(hot_small, hot_small if self_join else other, key_col)
+    other_big = hot_big if self_join else _split(other, key_col, big)[1]
+    s = salt_buckets
+    salted = join(
+        hot_big.withColumn("_salt", F.pmod(F.xxhash64(F.col("id")), F.lit(s))),
+        other_big.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))),
+        [key_col, "_salt"],
+    )
+    return plain.unionByName(salted)
 
 
 def salted_pair_join(
@@ -28,24 +109,21 @@ def salted_pair_join(
     salt_buckets: int,
     skew_cutoff: int,
     count_alias: str = "n_keys",
-    id_col: str = "id",
     carry: str | None = None,
     dedup: bool = True,
 ) -> DataFrame:
     """keyed(id, key) -> distinct unordered pairs (id_a < id_b, <count_alias>)
     where <count_alias> = number of distinct keys the pair collided on.
 
-    The a.id < b.id predicate is the reference's i<j pair dedup
-    (/root/reference/lasvdedup/utils/distance_matrix.py:38). Dedup across
-    keys via groupBy (map-side partial agg), never distinct() on the
-    exploded rows.
-
-    Skew: keys with more than ``skew_cutoff`` members take a salted path —
-    the left side keeps one salt s(id) = pmod(xxhash64(id), S), the right
-    side replicates to every salt; joining on (key, salt) yields each
-    unordered pair exactly once (from the orientation where the smaller id
-    sits on the left) while spreading the key's pair space over S tasks.
-    AQE skew-join stays on as a backstop for milder imbalance.
+    The self case of the kernel: ``keyed`` is both the hot and the other
+    side, checkpointed once with one census, and the a.id < b.id predicate
+    is the upstream lasvdedup's i<j pair dedup
+    (lasvdedup/utils/distance_matrix.py). Keys with more than
+    ``skew_cutoff`` members take the salted path; each unordered pair is
+    yielded once (from the orientation where the smaller id sits on the
+    left). Dedup across keys via groupBy (map-side partial agg), never
+    distinct() on the exploded rows. AQE skew-join stays on as a backstop
+    for milder imbalance.
 
     carry: optional NARROW per-id payload column in ``keyed`` to ride
     through the join into the output as <carry>_a / <carry>_b. For a
@@ -63,78 +141,20 @@ def salted_pair_join(
     derivable from the two fingerprints), a map-side filter then yields
     each pair exactly once with NO shuffle at all.
     """
-    kid = F.col(id_col)
-    pa, pb = (f"{carry}_a", f"{carry}_b") if carry else (None, None)
-
-    def _pair_cols(prefix_a: str = "a", prefix_b: str = "b") -> list:
-        cols = [
-            F.col(f"{prefix_a}.{id_col}").alias("id_a"),
-            F.col(f"{prefix_b}.{id_col}").alias("id_b"),
-        ]
-        if carry:
-            cols += [
-                F.col(f"{prefix_a}.{carry}").alias(pa),
-                F.col(f"{prefix_b}.{carry}").alias(pb),
-            ]
-        if not dedup:
-            cols.append(F.col(f"{prefix_a}.{key_col}").alias(key_col))
-        return cols
-
+    fields = ["id"] + ([carry] if carry else [])
     # payload is functionally dependent on id, so grouping by it too keeps
     # the same (id_a, id_b) groups while letting it ride the aggregation
-    group_cols = ["id_a", "id_b"] + ([pa, pb] if carry else [])
-
-    if salt_buckets <= 1:
-        a, b = keyed.alias("a"), keyed.alias("b")
-        joined = a.join(b, key_col).where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        if not dedup:
-            return joined.select(*_pair_cols())
-        return joined.select(*_pair_cols()).groupBy(*group_cols).agg(
-            F.count("*").alias(count_alias)
-        )
-
-    # Referenced by three subtrees (census, small path, salted path); lazy
-    # localCheckpoint so the upstream pipeline runs once per action, not
-    # three times (Spark has no cross-subtree CSE). Lazy = still no job at
-    # composition time.
-    keyed = keyed.localCheckpoint(eager=False)
-    sizes = keyed.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # The census result is itself referenced FOUR times (anti probe x2 via
-    # the a/b aliases, semi probe x2) and Spark has no cross-subtree CSE:
-    # without its own lazy checkpoint the full census aggregation — a
-    # complete pass over `keyed` plus an exchange — appears four times in
-    # the physical plan (4 Exchange census subtrees measured in the r06
-    # before-plans). Checkpointing the tiny over-cutoff key list runs the
-    # census once; the four broadcast builds then scan the cached result.
-    big = (
-        sizes.where(F.col("_ksz") > skew_cutoff)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-
-    small = keyed.join(F.broadcast(big), key_col, "left_anti")
-    plain = (
-        small.alias("a")
-        .join(small.alias("b"), key_col)
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(*_pair_cols())
-    )
-
-    skewed = keyed.join(F.broadcast(big), key_col, "left_semi")
-    s = salt_buckets
-    left = skewed.withColumn("_salt", F.pmod(F.xxhash64(kid), F.lit(s)))
-    right = skewed.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-    salted = (
-        left.alias("a")
-        .join(right.alias("b"), [key_col, "_salt"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(*_pair_cols())
-    )
-
-    both = plain.unionByName(salted)
+    group = [f"{c}_{s}" for c in fields for s in "ab"]
+    cols = [F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in fields for s in "ab"]
     if not dedup:
-        return both
-    return both.groupBy(*group_cols).agg(F.count("*").alias(count_alias))
+        cols.append(F.col(f"a.{key_col}").alias(key_col))
+    pairs = _salted_join(
+        keyed, keyed, key_col, salt_buckets, skew_cutoff, cols,
+        F.col("a.id") < F.col("b.id"),
+    )
+    if not dedup:
+        return pairs
+    return pairs.groupBy(*group).agg(F.count("*").alias(count_alias))
 
 
 def salted_cross_join(
@@ -144,88 +164,34 @@ def salted_cross_join(
     salt_buckets: int,
     skew_cutoff: int,
     count_alias: str = "n_keys",
-    id_col: str = "id",
     out_left: str = "id_l",
     out_right: str = "id_r",
     dedup: bool = True,
 ) -> DataFrame:
     """Bipartite analog of salted_pair_join: every (left-id, right-id)
     collision on ``key_col``, with <count_alias> = number of distinct keys
-    the pair collided on. Pass the UNBOUNDED side as ``right`` — the skew
-    census runs there (the streaming use: ``left`` = one micro-batch,
-    bounded by trigger size; ``right`` = the accumulated band index, which
-    grows without bound, so a boilerplate key's hot spot lives on that
-    side).
-
-    Skew: keys whose RIGHT membership exceeds ``skew_cutoff`` take the
-    salted path — each right row keeps one salt s(id) = pmod(xxhash64(id),
-    S) and the (bounded) left side replicates to every salt, so the hot
-    key's pair space spreads over S tasks while each (l, r) pair is still
-    produced exactly once. Same dedup discipline as salted_pair_join:
-    groupBy on the pair (map-side combinable), never distinct() on the
-    exploded rows. Both inputs are referenced by multiple subtrees
-    (census / anti / semi), hence the lazy localCheckpoints — still no job
-    at plan-composition time.
+    the pair collided on. Pass the UNBOUNDED side as ``right`` — it is the
+    kernel's hot side, where the skew census runs (the streaming use:
+    ``left`` = one micro-batch, bounded by trigger size; ``right`` = the
+    accumulated band index, which grows without bound, so a boilerplate
+    key's hot spot lives on that side). Each right row of a hot key keeps
+    one salt and the (bounded) left side replicates to every salt. Same
+    dedup discipline as salted_pair_join: groupBy on the pair (map-side
+    combinable), never distinct() on the exploded rows.
 
     dedup=False skips the final pair groupBy (and the <count_alias>
     column): for callers where each (l, r) pair can only arise via ONE key
     by construction (IVF: every target lives in exactly one inverted
     list), the groupBy would be a full extra exchange of the candidate set
     that deduplicates nothing."""
-    lid, rid = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
-
-    def _out(a: str = "a", b: str = "b") -> list:
-        return [
-            F.col(f"{a}.{id_col}").alias(out_left),
-            F.col(f"{b}.{id_col}").alias(out_right),
-        ]
-
-    if salt_buckets <= 1:
-        joined = left.alias("a").join(right.alias("b"), key_col)
-        if not dedup:
-            return joined.select(*_out())
-        return joined.select(*_out()).groupBy(out_left, out_right).agg(
-            F.count("*").alias(count_alias)
-        )
-
-    left = left.localCheckpoint(eager=False)
-    right = right.localCheckpoint(eager=False)
-    sizes = right.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # single census: see salted_pair_join — `big` feeds three broadcast
-    # probes; without its own checkpoint the census pass over `right`
-    # replicates per probe
-    big = (
-        sizes.where(F.col("_ksz") > skew_cutoff)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-
-    r_small = right.join(F.broadcast(big), key_col, "left_anti")
-    plain = left.alias("a").join(r_small.alias("b"), key_col).select(*_out())
-
-    s = salt_buckets
-    l_big = left.join(F.broadcast(big), key_col, "left_semi").withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
-    )
-    r_big = right.join(F.broadcast(big), key_col, "left_semi").withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))
-    )
-    salted = l_big.alias("a").join(r_big.alias("b"), [key_col, "_salt"]).select(*_out())
-
-    both = plain.unionByName(salted)
+    cols = [F.col("a.id").alias(out_left), F.col("b.id").alias(out_right)]
+    pairs = _salted_join(right, left, key_col, salt_buckets, skew_cutoff, cols)
     if not dedup:
-        return both
-    return both.groupBy(out_left, out_right).agg(
-        F.count("*").alias(count_alias)
-    )
+        return pairs
+    return pairs.groupBy(out_left, out_right).agg(F.count("*").alias(count_alias))
 
 
-def capped_by_key(
-    keyed: DataFrame,
-    key_col: str,
-    cap: int | None,
-    id_col: str = "id",
-) -> DataFrame:
+def capped_by_key(keyed: DataFrame, key_col: str, cap: int | None) -> DataFrame:
     """Cap every key group to at most ``cap`` rows — deterministically and
     with NO single-partition sort. None = passthrough (exact).
 
@@ -238,8 +204,8 @@ def capped_by_key(
     keeps a uniform deterministic sample and never materializes a
     total order:
 
-      1. broadcast census of over-cap keys (map-side-combinable count);
-      2. under-cap keys pass through untouched (left_anti probe);
+      1. the kernel's census of over-cap keys (``_census``, cutoff = cap);
+      2. under-cap keys pass through untouched (the ``_split`` anti probe);
       3. over-cap keys find their cap-th smallest (hash, id) via a
          two-level top-cap aggregation — each (key, salt) partial sorts
          ~m/S rows and keeps <= cap, the per-key merge sorts <= S*cap —
@@ -262,27 +228,14 @@ def capped_by_key(
     # salt fan-out for the threshold computation only; bounds the per-task
     # sort of a mega-bucket at m/S rows without changing the result
     thin_salts = 64
-    h = F.xxhash64(F.col(id_col), F.col(key_col))
-    keyed = keyed.localCheckpoint(eager=False)
-
-    sizes = keyed.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    # single census (see salted_pair_join): `big` feeds two broadcast
-    # probes; checkpoint so the census pass over `keyed` runs once
-    big = (
-        sizes.where(F.col("_ksz") > cap)
-        .select(key_col)
-        .localCheckpoint(eager=False)
-    )
-    small = keyed.join(F.broadcast(big), key_col, "left_anti")
-
-    big_rows = (
-        keyed.join(F.broadcast(big), key_col, "left_semi")
-        .withColumn("_h", h)
-        .withColumn("_salt", F.pmod(F.col("_h"), F.lit(thin_salts)))
-    )
+    keyed, big = _census(keyed, key_col, cap)
+    small, big_rows = _split(keyed, key_col, big)
+    big_rows = big_rows.withColumn(
+        "_h", F.xxhash64(F.col("id"), F.col(key_col))
+    ).withColumn("_salt", F.pmod(F.col("_h"), F.lit(thin_salts)))
     # explicit field names: struct <= struct comparison requires the two
     # struct types (incl. field names) to match exactly
-    rank = F.struct(F.col("_h").alias("h"), F.col(id_col).alias("i"))
+    rank = F.struct(F.col("_h").alias("h"), F.col("id").alias("i"))
     partials = big_rows.groupBy(key_col, "_salt").agg(
         F.slice(F.array_sort(F.collect_list(rank)), 1, cap).alias("_top")
     )

@@ -645,9 +645,12 @@ def dedup(
         # one), so the defensive de-dup exchange inside CC is redundant here
         # meta, not narrow: components only needs the id universe — reading
         # it from the lean checkpoint avoids re-scanning input text
-        # assume_unique_ids: url is the input's primary key (validated
-        # schema) — the defensive distinct() was a full exchange of the
-        # whole id universe deduplicating nothing
+        # assume_unique_ids: unique urls are an UNCHECKED input contract
+        # (validate_pages_schema checks only that the columns exist); the
+        # defensive distinct() was a full exchange of the whole id
+        # universe. Duplicate urls are not rejected: assign_components
+        # emits one row per copy and no test defines the classification
+        # rows they end up as (probes saw them collapse to one row).
         lambda: components.assign_components(
             meta, edges, assume_distinct=True, input_cached=True,
             assume_unique_ids=True,

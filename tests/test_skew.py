@@ -211,27 +211,46 @@ def test_capped_by_key_exact_deterministic_no_window(spark):
     assert capped_by_key(df, "bucket", None) is df
 
 
-def test_salted_cross_join_equals_plain_bipartite(spark):
+@pytest.mark.parametrize(
+    "shape", ["hot_right", "ivf_no_dedup", "hot_both_sides"]
+)
+def test_salted_cross_join_equals_plain_bipartite(spark, shape):
     """Bipartite salted join: identical pair set as the plain equi-join,
     with the hot RIGHT key (the accumulated-index side in streaming) spread
-    across salts; plan shows the salted union."""
+    across salts; plan shows the salted union. Shapes: hot_right is the
+    streaming shape; ivf_no_dedup is the IVF call (dedup=False, custom
+    output names, one row per colliding key); hot_both_sides gives the left
+    side its own hot group of the same key, whose rows fan out over every
+    salt and must still meet each right row exactly once (n9/o9 also
+    collide on a second key, so <count_alias> must count 2)."""
     from lasvdedup_spark.operators.pairs import salted_cross_join
 
+    n_left_hot = 30 if shape == "hot_both_sides" else 5
     left = spark.createDataFrame(
-        [(f"n{i}", 1) for i in range(5)] + [("n9", 3)], "id string, bucket long"
+        [(f"n{i}", 1) for i in range(n_left_hot)] + [("n9", 3)],
+        "id string, bucket long",
     )
     right = spark.createDataFrame(
         [(f"o{i}", 1) for i in range(50)] + [("o9", 3), ("oz", 4)],
         "id string, bucket long",
     )
-    plain = {
-        (r["id_l"], r["id_r"])
-        for r in salted_cross_join(left, right, "bucket", 1, 10).collect()
-    }
-    salted_df = salted_cross_join(left, right, "bucket", 8, 10)
-    salted = {(r["id_l"], r["id_r"]) for r in salted_df.collect()}
+    ivf = {"out_left": "qid", "out_right": "tid", "dedup": False}
+    kwargs = ivf if shape == "ivf_no_dedup" else {}
+    plain = sorted(
+        tuple(r)
+        for r in salted_cross_join(left, right, "bucket", 1, 10, **kwargs).collect()
+    )
+    salted_df = salted_cross_join(left, right, "bucket", 8, 10, **kwargs)
+    salted = sorted(tuple(r) for r in salted_df.collect())
+    assert salted_df.columns == (["qid", "tid"] if kwargs else ["id_l", "id_r", "n_keys"])
+    # row lists, not sets: a pair duplicated by the salt fan-out must fail
     assert plain == salted
-    assert len(plain) == 5 * 50 + 1
+    if shape == "hot_both_sides":
+        # n9 and o9 also share the hot key: one pair, two colliding keys
+        assert len(plain) == n_left_hot * 50
+        assert ("n9", "o9", 2) in plain
+    else:
+        assert len(plain) == n_left_hot * 50 + 1
     plan = salted_df._jdf.queryExecution().executedPlan().toString()
     assert "_salt" in plan and "Union" in plan
 
@@ -394,3 +413,44 @@ def test_simhash_pairs_plan_has_no_pair_exchange(spark):
     df = S.simhash_dup_pairs(pages, DedupConfig())
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(id_a" not in plan, plan
+
+
+def test_one_census_per_salted_call(spark, monkeypatch):
+    """Plan pin: each salted entry point with salt_buckets > 1 composes the
+    skew-census aggregation over its input (the ``_ksz`` count) exactly
+    once — every broadcast anti/semi probe (and, for the self join, both
+    join ends) reads one checkpointed over-cutoff key list instead of
+    re-aggregating the input per reference. A lazily checkpointed subtree
+    shows downstream only as a bare Scan ExistingRDD, so the plans handed
+    to localCheckpoint are counted along with the returned plan."""
+    from lasvdedup_spark.operators.pairs import (
+        capped_by_key,
+        salted_cross_join,
+        salted_pair_join,
+    )
+
+    keyed = spark.createDataFrame(
+        [(f"u{i}", i % 3) for i in range(40)], "id string, bucket long"
+    )
+    other = spark.createDataFrame(
+        [(f"n{i}", i % 2) for i in range(6)], "id string, bucket long"
+    )
+    plans = []
+    real = type(keyed).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(keyed), "localCheckpoint", spy)
+    builds = {
+        "salted_pair_join": lambda: salted_pair_join(keyed, "bucket", 4, 5),
+        "salted_cross_join": lambda: salted_cross_join(other, keyed, "bucket", 4, 5),
+        "capped_by_key": lambda: capped_by_key(keyed, "bucket", 5),
+    }
+    got = {}
+    for name, build in builds.items():
+        plans.clear()
+        plans.append(build()._jdf.queryExecution().optimizedPlan().toString())
+        got[name] = sum(p.count("AS _ksz") for p in plans)
+    assert got == {name: 1 for name in builds}
