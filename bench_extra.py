@@ -3,13 +3,14 @@ file holds the extra instrumentation the optimization round needs):
 
   * per-query noop-sink isolation (guide §1.4) with best-of-N timing,
     identical query construction to bench.py;
-  * .explain("formatted") capture for every bench query into
+  * .explain("formatted") capture for every bench query — or for the
+    named declared queries of entry_queries.QUERIES — into
     plans/r06/<query>_<tag>.txt (guide §7.2) — the committed evidence for
     plan-shape claims in OPTIMIZATION_r06.md;
   * job labels (guide §1.5).
 
 Usage:
-  python bench_extra.py plans <tag>      # capture plans only (fast)
+  python bench_extra.py plans <tag> [declared_query ...]  # plans only (fast)
   python bench_extra.py time [q ...]     # noop-timed queries (all or named)
 """
 
@@ -20,10 +21,24 @@ import sys
 import time
 
 
+def write_plans(spark, builders: dict, tag: str) -> None:
+    """.explain("formatted") of each built query into
+    plans/r06/<query>_<tag>.txt next to this script."""
+    out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
+    os.makedirs(out_dir, exist_ok=True)
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    for name, build in builders.items():
+        p = build()._jdf.queryExecution().explainString(mode)
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(p)
+        print(f"wrote {path} ({len(p)} bytes)")
+
+
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
-    tag = sys.argv[2] if mode == "plans" and len(sys.argv) > 2 else "before"
-    only = set(sys.argv[2:]) if mode == "time" else set()
+    names = sys.argv[2:]
+    tag = names.pop(0) if mode == "plans" and names else "before"
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -48,6 +63,13 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     cfg = DedupConfig(hash_family="xxhash64")
+
+    if mode == "plans" and names:
+        from lasvdedup_spark.entry_queries import QUERIES
+
+        write_plans(spark, {n: lambda n=n: QUERIES[n](spark, sf_dir) for n in names}, tag)
+        spark.stop()
+        return
 
     pages, _ = synth_pages_with_dups(spark, sf_dir, expand=expand)
     pages = pages.repartition(3 * cpus, "url").localCheckpoint(eager=True)
@@ -78,25 +100,13 @@ def main() -> None:
     }
 
     if mode == "plans":
-        out_dir = os.path.join(os.path.dirname(__file__), "plans", "r06")
-        os.makedirs(out_dir, exist_ok=True)
-        for name, build in builders.items():
-            df = build()
-            p = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            path = os.path.join(out_dir, f"{name}_{tag}.txt")
-            with open(path, "w") as f:
-                f.write(p)
-            print(f"wrote {path} ({len(p)} bytes)")
+        write_plans(spark, builders, tag)
         spark.stop()
         return
 
     timings: dict[str, float] = {}
     for name, build in builders.items():
-        if only and name not in only:
+        if names and name not in names:
             continue
         best = None
         samples = []

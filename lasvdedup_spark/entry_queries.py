@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
 from lasvdedup_spark.config import MINHASH_PRIME, DedupConfig
 from lasvdedup_spark.functions.hashing import (
     minhash_sig_expr,
@@ -1537,9 +1538,9 @@ def q_streaming_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("id_b").cast("long").alias("id_b"),
         "jaccard",
     )
-    # materialize before deleting the backing files; the caller collects
-    # from the cached blocks
-    out = out.localCheckpoint(eager=True)
+    # pinned before deleting the backing files; the caller collects from
+    # the cached blocks
+    out = lineage.pin(out)
     _shutil.rmtree(tmp, ignore_errors=True)
     return out
 

@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
+
 
 def plane_signs(n_planes: int, dim: int, seed: str = "ann") -> list[list[int]]:
     """Deterministic ±1 hyperplane matrix from md5 parity — shared verbatim
@@ -73,7 +75,12 @@ def knn_bruteforce(
     (broadcast); targets stream through — one pass, no shuffle of targets.
     -> (qid, tid, pos, score)."""
     j = targets.crossJoin(F.broadcast(queries))
-    scored = j.withColumn("score", cosine_expr("qvec", "tvec"))
+    return _top_k(j.withColumn("score", cosine_expr("qvec", "tvec")), k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per query, the ``k`` best-scored targets (ties by tid ascending).
+    scored(qid, tid, score, ...) -> (qid, tid, pos, score)."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("tid"))
     return (
         scored.withColumn("pos", F.row_number().over(w))
@@ -208,6 +215,19 @@ def cosine_dup_pairs(
     )
 
 
+def _score_candidates(
+    cand: DataFrame, vectors: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """Join both vectors back onto narrow (qid, tid) candidates and score
+    them: the wide vector column never rides the candidate joins."""
+    v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    return (
+        cand.join(v.select(F.col("id").alias("qid"), F.col("vec").alias("qvec")), "qid")
+        .join(v.select(F.col("id").alias("tid"), F.col("vec").alias("tvec")), "tid")
+        .withColumn("score", cosine_expr("qvec", "tvec"))
+    )
+
+
 def ivf_centroids(
     vectors: DataFrame,
     n_centroids: int,
@@ -260,7 +280,7 @@ def ivf_lloyd_centroids(
     Shuffle shape per round: the narrow (cid, pos, val) explode —
     n_vectors * dim rows of 3 scalar columns — aggregated by (cid, pos)
     with map-side partial averages; the wide vector column itself never
-    shuffles. Driver loop of n_iters (1-2 in practice) eager-checkpointed
+    shuffles. Driver loop of n_iters (1-2 in practice) pinned
     rounds, mirroring the CC fixpoint pattern (components.py).
     -> (cid, cvec: array<double>)."""
     # Fixed-point range guard: the int64 accumulator is safe only while
@@ -309,10 +329,9 @@ def ivf_lloyd_centroids(
                 F.expr("transform(pm, x -> cast(x.m as double))").alias("new_cvec"),
             )
         )
-        cents = (
+        cents = lineage.pin(
             cents.join(means, "cid", "left")
             .select("cid", F.coalesce("new_cvec", "cvec").alias("cvec"))
-            .localCheckpoint(eager=True)
         )
     return cents
 
@@ -395,19 +414,7 @@ def ivf_topk(
         out_right="tid",
         dedup=False,
     ).where(F.col("qid") != F.col("tid"))
-    v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    scored = (
-        cand.join(v.select(F.col("id").alias("qid"), F.col("vec").alias("qvec")), "qid")
-        .join(v.select(F.col("id").alias("tid"), F.col("vec").alias("tvec")), "tid")
-        .withColumn("score", cosine_expr("qvec", "tvec"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("tid"))
-    return (
-        scored.withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= k)
-        .select("qid", "tid", F.col("pos").cast("long").alias("pos"),
-                F.round("score", 6).alias("score"))
-    )
+    return _top_k(_score_candidates(cand, vectors, id_col, vec_col), k)
 
 
 def ann_lsh_topk(
@@ -438,11 +445,10 @@ def ann_lsh_topk(
     )
     from lasvdedup_spark.operators.pairs import salted_pair_join
 
-    # lazy checkpoint: the orientation expansion references the unordered
-    # pairs twice; without it the whole salted-join subtree executes twice
-    und = salted_pair_join(
-        b, "bucket", salt_buckets, skew_cutoff, count_alias="n_tables"
-    ).localCheckpoint(eager=False)
+    # shared: the orientation expansion reads the unordered pairs twice
+    und = lineage.share(
+        salted_pair_join(b, "bucket", salt_buckets, skew_cutoff, count_alias="n_tables")
+    )
     cand = und.select(
         F.col("id_a").alias("qid"), F.col("id_b").alias("tid"), "n_tables"
     ).unionByName(
@@ -450,16 +456,4 @@ def ann_lsh_topk(
             F.col("id_b").alias("qid"), F.col("id_a").alias("tid"), "n_tables"
         )
     )
-    v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    scored = (
-        cand.join(v.select(F.col("id").alias("qid"), F.col("vec").alias("qvec")), "qid")
-        .join(v.select(F.col("id").alias("tid"), F.col("vec").alias("tvec")), "tid")
-        .withColumn("score", cosine_expr("qvec", "tvec"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("tid"))
-    return (
-        scored.withColumn("pos", F.row_number().over(w))
-        .where(F.col("pos") <= k)
-        .select("qid", "tid", F.col("pos").cast("long").alias("pos"),
-                F.round("score", 6).alias("score"))
-    )
+    return _top_k(_score_candidates(cand, vectors, id_col, vec_col), k)

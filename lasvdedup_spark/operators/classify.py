@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
 from lasvdedup_spark.config import DedupConfig
 
 GOOD, BAD, COINFECTION = "good", "bad", "coinfection"
@@ -104,11 +105,9 @@ def classify(
         #             a component with genuinely unverified pairs.
         # min_jaccard is unaffected: every implied pair is 1.0.
         #
-        # Lazy checkpoint (r6): the transitive path references ecomp from
-        # FOUR subtrees (half, rep_map, implied, cross_cluster) and Spark
-        # has no cross-subtree CSE — without it the edges-to-assignments
-        # join executes once per reference. Same for rep_map (ra + rb).
-        ecomp = ecomp.localCheckpoint(eager=False)
+        # shared: the transitive path reads ecomp from FOUR subtrees (half,
+        # rep_map, implied, cross_cluster) and rep_map from two (ra, rb)
+        ecomp = lineage.share(ecomp)
         trans = ecomp.where(F.col("transitive"))
         # STAR-SHAPE GUARD: the accounting below assumes each member has at
         # most ONE rep (exact.py emits star edges rep->member). classify()
@@ -118,13 +117,12 @@ def classify(
         # min(_rep) per member makes malformed input degrade predictably
         # (cross-cluster counting still sound, implied count conservative)
         # instead of corrupting the completeness gate.
-        rep_map = (
+        rep_map = lineage.share(
             trans.select(
                 F.col("id_b").alias("_member"), F.col("id_a").alias("_rep")
             )
             .groupBy("_member")
             .agg(F.min("_rep").alias("_rep"))
-            .localCheckpoint(eager=False)
         )
         # per-rep star degree -> cluster size m = degree + 1 -> C(m,2)
         implied = (

@@ -18,8 +18,8 @@ Converges in O(log n) rounds to star graphs rooted at each component's
 minimum id. Works directly on string ids (lexicographic min) — no
 collision-prone id hashing, no GraphFrames dependency.
 
-Driver-side loop with localCheckpoint() per round to truncate lineage
-(otherwise the plan doubles each round and Catalyst analysis time explodes);
+Driver-side loop with a lineage cut per round (``lineage.share``; otherwise
+the plan doubles each round and Catalyst analysis time explodes);
 convergence is read off each round directly — the edge set is a fixpoint
 iff it is a star forest (no node appears as both src and dst), so no
 confirmation round is ever computed.
@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lasvdedup_spark import lineage
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -69,7 +71,7 @@ def _star_violations(edges: DataFrame) -> int:
     edge set is a star forest rooted at component minima, which is exactly
     the alternating large/small-star fixpoint (every small-star output
     edge already has dst < src, and large_star/small_star are the identity
-    on a star forest). Run against a LAZY localCheckpoint, this one action
+    on a star forest). Run against a lazily shared round, this one action
     both materializes the round (truncating lineage) and returns the
     convergence signature.
 
@@ -116,12 +118,12 @@ def connected_components(
     first-round cost — but the flag should still be set truthfully.
 
     input_cached=True promises the caller already materialized ``edges``
-    (an eager localCheckpoint or a written+re-read stage checkpoint): skip
-    this function's own eager checkpoint — round 1's multiple references
-    to the narrowed edge view then re-run only a cheap projection over the
-    caller's cache instead of paying a SECOND cache write of nearly the
-    same rows (the ~4.3 s "edges materialization" item in the round-3
-    scaling profile, BENCH.md). Leave False for un-materialized plans:
+    (``lineage.pin`` or a written+re-read stage checkpoint): skip this
+    function's own pin — round 1's multiple references to the narrowed
+    edge view then re-run only a cheap projection over the caller's cache
+    instead of paying a SECOND cache write of nearly the same rows (the
+    ~4.3 s "edges materialization" item in the round-3 scaling profile,
+    BENCH.md). Leave False for un-materialized plans:
     round 1 references the input from several sibling subtrees, which
     would otherwise re-execute the whole upstream per reference.
     """
@@ -131,16 +133,14 @@ def connected_components(
     ).where(F.col("src") != F.col("dst"))
     if not assume_distinct:
         e = e.distinct()
-        e = e.localCheckpoint(eager=True)
-    elif not input_cached:
-        e = e.localCheckpoint(eager=True)
+    if not (assume_distinct and input_cached):
+        e = lineage.pin(e)
 
     for _ in range(max_iter):
-        # lazy checkpoint + violation-census action = ONE action
-        # materializing the round (see _star_violations); eager=True would
-        # spend a second job, and checksum-equality would spend a whole
-        # extra confirmation round
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # share + violation-census action = ONE action materializing the
+        # round (see _star_violations); pin would spend a second job, and
+        # checksum-equality a whole extra confirmation round
+        e = lineage.share(_small_star(_large_star(e)))
         if _star_violations(e) == 0:
             break
     else:

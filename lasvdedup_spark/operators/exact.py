@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
+
 
 def with_content_hash(
     pages: DataFrame, text_col: str = "text", hash_family: str = "md5"
@@ -47,13 +49,10 @@ def exact_dup_clusters(
     (io_utils.py:48-55); distributed engines have no input order, so the
     explicit id tiebreak is the order-isomorphic equivalent (SURVEY §7).
     """
-    # lazy localCheckpoint: (id, hash) feeds BOTH the aggregate and the
-    # join-back side; without it the content hash over the full text is
-    # computed twice (no cross-subtree CSE). Lazy = no job at composition.
-    h = (
-        with_content_hash(pages, hash_family=hash_family)
-        .select(id_col, "content_hash")
-        .localCheckpoint(eager=False)
+    # (id, hash) feeds both the aggregate and the join-back side: shared,
+    # the content hash over the full text is computed once
+    h = lineage.share(
+        with_content_hash(pages, hash_family=hash_family).select(id_col, "content_hash")
     )
     # groupBy + join back, NOT count/min over Window.partitionBy(hash): the
     # window shuffles every member of a mega-cluster of identical pages

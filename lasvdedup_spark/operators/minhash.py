@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
 from lasvdedup_spark.config import DedupConfig
 from lasvdedup_spark.functions.hashing import (
     band_keys_expr,
@@ -230,18 +231,15 @@ def minhash_dup_pairs(
     and the verify side, and Spark has no cross-subtree common-subexpression
     reuse — an un-materialized sigs subtree executes twice per action.
 
-    eager=True materializes the signatures NOW (localCheckpoint): the band
-    side and both verify joins are SIBLING stages of the same downstream
-    job, so without materialization each computes the full signature
-    subtree (a lazy cache races — measured as 2x the signature map work in
-    the scaling profile, BENCH.md round 3). Default False keeps the
-    operator lazy — no Spark job at plan-composition time, so it composes
-    onto streaming DataFrames and pure-plan callers; batch callers on hot
-    paths (bench) opt in."""
+    eager=True pins the signatures (``lineage.pin``): the band side and
+    both verify joins are sibling stages of the same downstream job.
+    Default False keeps the operator lazy — no Spark job at
+    plan-composition time, so it composes onto streaming DataFrames and
+    pure-plan callers; batch callers on hot paths (bench) opt in."""
     if sigs is None:
         sigs = signatures(pages, cfg, id_col)
         if eager:
-            sigs = sigs.localCheckpoint(eager=True)
+            sigs = lineage.pin(sigs)
     bkts = capped_buckets(band_buckets(sigs, cfg), cfg)
     cand = candidate_pairs(bkts, cfg)
     return verified_pairs(cand, sigs, cfg)

@@ -36,20 +36,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
+
 
 def _census(df: DataFrame, key_col: str, cutoff: int) -> tuple[DataFrame, DataFrame]:
-    """-> (df behind a lazy localCheckpoint, ``big`` = keys with more than
-    ``cutoff`` rows, checkpointed on its own).
+    """-> (``df`` shared, ``big`` = keys with more than ``cutoff`` rows,
+    shared on its own).
 
-    Both are referenced by several subtrees (census, anti probe, semi
-    probe, both join ends) and Spark has no cross-subtree CSE: without the
-    checkpoints the upstream pipeline would run once per reference, and the
-    full census aggregation — a pass over ``df`` plus an exchange — once
-    per broadcast probe (4 Exchange census subtrees in the r06
-    before-plans). Lazy = still no job at composition time."""
-    df = df.localCheckpoint(eager=False)
+    ``df`` is read by the census, both probes and both join ends; ``big``
+    by every broadcast probe — unshared, the census aggregation ran once
+    per probe (4 Exchange census subtrees in the r06 before-plans)."""
+    df = lineage.share(df)
     sizes = df.groupBy(key_col).agg(F.count("*").alias("_ksz"))
-    big = sizes.where(F.col("_ksz") > cutoff).select(key_col).localCheckpoint(eager=False)
+    big = lineage.share(sizes.where(F.col("_ksz") > cutoff).select(key_col))
     return df, big
 
 
@@ -88,7 +87,7 @@ def _salted_join(
     if salt_buckets <= 1:
         return join(hot, other, key_col)
     hot, big = _census(hot, key_col, cutoff)
-    other = hot if self_join else other.localCheckpoint(eager=False)
+    other = hot if self_join else lineage.share(other)
     hot_small, hot_big = _split(hot, key_col, big)
     # a cross join's plain path keeps ALL other-side rows: a big-key row
     # there finds no partner in hot_small, so no anti probe is needed

@@ -33,6 +33,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lasvdedup_spark import lineage
 from lasvdedup_spark.config import DedupConfig
 
 # Persisted-stage FORMAT version, folded into every checkpoint address.
@@ -51,31 +52,22 @@ class StageRunner:
         spark: SparkSession,
         cfg: DedupConfig,
         force: bool = False,
-        extra_key: str = "",
+        tiers: tuple[str, ...] = ("minhash",),
+        quality_cols: tuple[str, ...] = (),
         collect_metrics: bool = False,
     ):
         """force=True recomputes every stage even when a finished checkpoint
         exists — the reference's ``--force`` rerun semantics
         (/root/reference/lasvdedup/cli.py:42-43, Snakemake --forceall).
 
-        extra_key extends the content address beyond DedupConfig for
-        call-level semantics (tiers, quality_cols): two dedup() calls with
-        the same config but different tiers MUST NOT share checkpoints —
-        the edge set differs."""
+        tiers/quality_cols are the dedup() call's: they change stage
+        outputs, so they are part of the checkpoint address
+        (``checkpoint_root``, the same one stage_plan reads)."""
         self.spark = spark
         self.cfg = cfg
         self.force = force
         self.collect_metrics = collect_metrics
-        self.root = (
-            os.path.join(
-                cfg.checkpoint_dir,
-                cfg.fingerprint()
-                + extra_key
-                + f"-f{CHECKPOINT_FORMAT_VERSION}",
-            )
-            if cfg.checkpoint_dir
-            else None
-        )
+        self.root = checkpoint_root(cfg, tiers, quality_cols)
         self.metrics: list[dict] = []
 
     def _path(self, stage: str) -> str:
@@ -101,47 +93,35 @@ class StageRunner:
         self,
         name: str,
         fn: Callable[[], DataFrame],
-        heavy: bool = False,
-        eager: bool = False,
+        cut: Callable[[DataFrame], DataFrame] | None = None,
     ) -> DataFrame:
         """Run-or-resume one stage. Without a checkpoint_dir this is a
-        pass-through (pure lazy DataFrame composition) — except heavy=True
-        stages, which get a localCheckpoint: they are consumed by several
-        downstream subtrees (components AND classification both read
-        edges), and without truncation every downstream action re-executes
-        the whole signature/band/join pipeline once per reference.
-
-        eager=True additionally materializes the checkpoint NOW. Use it
-        when the stage is consumed by SIBLING stages of one downstream job:
-        a lazy cache only dedups work across SEQUENTIAL actions — two
-        concurrent stages of the same job (the band-bucket side and the
-        verify-join side both hang off signatures) race on the cold cache
-        and each computes the full subtree (~2x the dominant map work;
-        measured as two concurrent 96-task stages of equal duration in the
-        scaling profile, BENCH.md round 3). Eager materialization runs the
-        subtree exactly once, and the sibling stages then read the cache."""
+        pass-through (pure lazy DataFrame composition) that applies the
+        stage's ``cut`` — ``lineage.share`` or ``lineage.pin``, for a stage
+        several downstream subtrees read (components AND classification
+        both read edges); with one, the written and re-read parquet is the
+        cut."""
         t0 = time.time()
         if self.root is None:
             df = fn()
-            if heavy:
-                df = df.localCheckpoint(eager=eager)
+            if cut is not None:
+                df = cut(df)
             # Pass-through metrics (north rule: the metrics story must not
-            # require a checkpoint_dir). Eagerly-materialized stages DO run
-            # a job here, so their wall time is real; when the caller asked
-            # for metrics (collect_metrics), their row count comes from one
-            # cheap count over the fresh cache. Purely lazy stages have no
-            # job to time — they are flagged lazy with composition-time
-            # seconds, never fake numbers.
-            rows = -1
-            if heavy and eager and self.collect_metrics:
-                rows = df.count()
+            # require a checkpoint_dir). Pinned stages DO run a job here,
+            # so their wall time is real; when the caller asked for metrics
+            # (collect_metrics), their row count comes from one cheap count
+            # over the fresh cache. Other stages have no job to time — they
+            # are flagged lazy with composition-time seconds, never fake
+            # numbers.
+            pinned = cut is lineage.pin
+            rows = df.count() if pinned and self.collect_metrics else -1
             self.metrics.append(
                 {
                     "stage": name,
                     "skipped": False,
                     "seconds": time.time() - t0,
                     "rows": rows,
-                    "lazy": not (heavy and eager),
+                    "lazy": not pinned,
                 }
             )
             return df
@@ -237,8 +217,9 @@ def _call_key(tiers: tuple[str, ...], quality_cols: tuple[str, ...]) -> str:
     """Checkpoint-address suffix for call-level (non-DedupConfig) semantics.
     tiers/quality_cols change stage outputs: two dedup() calls with the same
     config but different tiers MUST NOT share checkpoints — the edge set
-    differs. Shared by dedup() and stage_plan() so --dry-run reports
-    done-ness from the directory the real run will actually use."""
+    differs. Part of checkpoint_root, which StageRunner and stage_plan()
+    share, so --dry-run reports done-ness from the directory the real run
+    will actually use."""
     if tiers != ("minhash",) or quality_cols:
         blob = json.dumps([sorted(tiers), list(quality_cols)]).encode()
         return "-" + hashlib.md5(blob).hexdigest()[:8]
@@ -415,14 +396,12 @@ def dedup(
     validate_tiers(tiers)
     lang_cols = ("lang",) if cfg.lang_thresholds else ()
     validate_pages_schema(pages, ("url", "text", *quality_cols, *lang_cols))
-    # tiers/quality_cols change stage outputs but live outside DedupConfig:
-    # fold them into the checkpoint address (shared with stage_plan) or a
-    # resume with different arguments silently reuses stale stages
     r = StageRunner(
         spark,
         cfg,
         force=force,
-        extra_key=_call_key(tiers, quality_cols),
+        tiers=tiers,
+        quality_cols=quality_cols,
         collect_metrics=metrics_sink is not None,
     )
 
@@ -494,10 +473,9 @@ def dedup(
         sigs = r.stage(
             "signatures",
             lambda: minhash.signatures(narrow, cfg),
-            heavy=True,
-            eager=True,  # consumed by SIBLING stages (bands + both verify
-            # joins) of the first downstream job — lazy caching would let
-            # them race and compute signatures twice (see stage())
+            # pinned: the bands side and both verify joins are sibling
+            # stages of the first downstream job
+            cut=lineage.pin,
         )
         bands = r.stage(
             "bands", lambda: minhash.capped_buckets(minhash.band_buckets(sigs, cfg), cfg)
@@ -620,12 +598,12 @@ def dedup(
     else:
         refined = merged
 
-    # eager: edges are materialized HERE once (cache write or stage
+    # pinned: edges are materialized HERE once (cache write or stage
     # parquet), and the CC loop is told so (input_cached) — its first round
     # then recomputes only a narrow projection per reference instead of
     # paying a second, nearly-identical cache write (the ~4.3 s edges
     # materialization item in the round-3 scaling profile, BENCH.md)
-    edges = r.stage("edges", lambda: refined, heavy=True, eager=True)
+    edges = r.stage("edges", lambda: refined, cut=lineage.pin)
     if tag_transitive and "transitive" not in edges.columns:
         # A resumed edges checkpoint missing the 'transitive' column would
         # silently degrade classify's pair accounting (every >clade_size
@@ -655,7 +633,7 @@ def dedup(
             meta, edges, assume_distinct=True, input_cached=True,
             assume_unique_ids=True,
         ),
-        heavy=True,
+        cut=lineage.share,
     )
 
     stats = meta.select(F.col("url").alias("id"), "n_chars", *quality_cols)

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from lasvdedup_spark import lineage
 from lasvdedup_spark.config import DedupConfig
 from lasvdedup_spark.functions.hashing import sig_jaccard_expr
 from lasvdedup_spark.operators.minhash import signatures
@@ -109,14 +110,9 @@ def batch_pairs(
     foreachBatch. -> (id_a, id_b, jaccard), distinct."""
     from lasvdedup_spark.operators.pairs import salted_cross_join, salted_pair_join
 
-    # lazy checkpoint (r6): sigs_new feeds three subtrees (sa, sb, and the
-    # cross-pair new-side lookup) and Spark has no cross-subtree CSE — the
-    # dedup exchange over the batch would otherwise run once per reference
-    sigs_new = (
-        batch_bands.select("id", "sig")
-        .dropDuplicates(["id"])
-        .localCheckpoint(eager=False)
-    )
+    # shared: sigs_new feeds three subtrees (sa, sb, and the cross-pair
+    # new-side lookup), each of which would rerun the dedup exchange
+    sigs_new = lineage.share(batch_bands.select("id", "sig").dropDuplicates(["id"]))
     sa = sigs_new.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs_new.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
 
@@ -233,7 +229,7 @@ def incremental_dedup_query(
 
     def process_batch(batch_bands: DataFrame, batch_id: int) -> None:
         s = batch_bands.sparkSession
-        batch_bands = _with_part(batch_bands).localCheckpoint(eager=True)
+        batch_bands = lineage.pin(_with_part(batch_bands))
 
         # read ONLY the index partitions whose band parts occur in this
         # batch (<= N_INDEX_PARTS values; the batch is already
@@ -267,9 +263,9 @@ def incremental_dedup_query(
             # max_bucket_size members and stops growing, so the per-batch
             # join cost against it stays bounded across the stream's life.
             # Dropped rows are counted into metrics/ — never silent.
-            to_append = capped_index_append(
-                batch_bands, old_idx, cfg.max_bucket_size
-            ).localCheckpoint(eager=True)
+            to_append = lineage.pin(
+                capped_index_append(batch_bands, old_idx, cfg.max_bucket_size)
+            )
             n_in = batch_bands.count()
             n_kept = to_append.count()
             s.createDataFrame(

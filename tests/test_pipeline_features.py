@@ -304,9 +304,10 @@ def test_metrics_without_checkpointing(spark):
 
     # without a sink, pass-through mode must not pay the counting jobs
     # (rows stays -1) — the default hot path is unchanged
+    from lasvdedup_spark import lineage
     from lasvdedup_spark.pipeline import StageRunner
 
     r = StageRunner(spark, DedupConfig())
-    df = r.stage("x", lambda: pages, heavy=True, eager=True)
+    df = r.stage("x", lambda: pages, cut=lineage.pin)
     df.collect()
     assert r.metrics[0]["rows"] == -1
